@@ -2121,8 +2121,9 @@ FROM sc ORDER BY score DESC, doc_id ASC LIMIT {k}"""
 def ft_boosting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ES boosting query through the REAL engine: positive OR-disjunction
     scores BM25, negative-matching docs demoted by negative_boost —
-    exact over the FULL positive match set via search_boosting's
-    WAND-probed stop proof (demotion can promote docs from arbitrarily
+    one filtered weight function on the one function_score executor
+    (SegmentIndex.search_function_score), exact over the FULL positive
+    match set via its WAND-probed stop proof (demotion can promote docs from arbitrarily
     deep, so a fixed over-fetch would be wrong; the oracle scores every
     match). tests/test_es_dsl.py pins that the demotion actually
     reorders this corpus and that both regimes are row-identical."""

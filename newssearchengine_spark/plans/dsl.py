@@ -20,9 +20,11 @@ bodies onto the engine so the queries run UNCHANGED:
   query_string/multi_match fields lists (the surrounding ES surface
   the engine implements)
 - match_all / constant_score (filter context at a constant boost) /
-  boosting (negative_boost demotion, exact over the full positive
-  match set) / function_score with field_value_factor (boost by a
-  doc field, exact via the same bounded-probe design) / multi_match
+  function_score (filter + weight / field_value_factor functions, or
+  a body-level field_value_factor) and boosting (negative_boost
+  demotion as one filtered weight function), both exact over the full
+  match set via the one executor SegmentIndex.search_function_score's
+  bounded probe / multi_match
   type best_fields|most_fields with tie_breaker / explicit dis_max
   with per-sub-query texts / simple_query_string (the unambiguous
   subset) / whole-query exists — the remaining ES compound-query
@@ -55,7 +57,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .search import SegmentIndex, search_dismax
+from .search import RANKED_SCHEMA, SegmentIndex, _ranked, search_dismax
 
 def _split_on(toks: list[str], op: str) -> list[list[str]]:
     """Split a token list on an operator token, dropping empty segments
@@ -889,11 +891,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
             total = total.unionByName(r)
         scored = (total.groupBy("doc_id")
                   .agg(F.round(F.sum("kscore"), 6).alias("score")))
-        top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(size)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return top.select(
-            (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-            "doc_id", "score")
+        return _ranked(scored, size)
     kind, spec = next(iter(q.items()))
     multi = indexes if isinstance(indexes, dict) else None
 
@@ -1108,8 +1106,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
             si = one(names[0] if names else None)
             toks = sorted(set(si.analyze_query(text)))
             if not toks:
-                return si.spark.createDataFrame(
-                    [], "rank bigint, doc_id bigint, score double")
+                return si.spark.createDataFrame([], RANKED_SCHEMA)
             out = si.search_bool(must=[[t] for t in toks], k=size)
             bf = boosts.get(names[0], 1.0) if names else 1.0
             if bf != 1.0:
@@ -1150,9 +1147,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
             clauses = [si.analyze_query(p) for p in parts]
             clauses = [c for c in clauses if c]
             if not clauses:
-                return si.spark.createDataFrame(
-                    [], "rank bigint, doc_id bigint, score double"
-                )
+                return si.spark.createDataFrame([], RANKED_SCHEMA)
             out = si.search_bool(must=clauses, k=size)
             bf = boosts.get(names[0], 1.0) if names else 1.0
             if bf != 1.0:
@@ -1227,8 +1222,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
                 egroups = [sorted(si.expand_fuzzy(
                     t, max_edits=_edits(t), prefix_len=pl,
                     max_expansions=mx)) for t in toks]
-                empty = si.spark.createDataFrame(
-                    [], "rank bigint, doc_id bigint, score double")
+                empty = si.spark.createDataFrame([], RANKED_SCHEMA)
                 if op == "and":
                     if any(not g for g in egroups) or not egroups:
                         # a required token with no expansion matches
@@ -1253,8 +1247,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
                         "minimum_should_match is a no-op under "
                         "operator:'and' (ES ignores it); drop one")
                 if not toks:
-                    return si.spark.createDataFrame(
-                        [], "rank bigint, doc_id bigint, score double")
+                    return si.spark.createDataFrame([], RANKED_SCHEMA)
                 # every token required, scored by the summed BM25 of
                 # all tokens — one must clause per token
                 out = si.search_bool(must=[[t] for t in toks], k=size)
@@ -1315,13 +1308,11 @@ def es_search(indexes, body: dict, size: int = 10, *,
         si = one(field)
         toks = si.analyze_query(text)
         if not toks:
-            return si.spark.createDataFrame(
-                [], "rank bigint, doc_id bigint, score double")
+            return si.spark.createDataFrame([], RANKED_SCHEMA)
         exp = si.expand_prefix(toks[-1], max_expansions=mx)
         should = sorted(set(toks[:-1]) | set(exp))
         if not should:
-            return si.spark.createDataFrame(
-                [], "rank bigint, doc_id bigint, score double")
+            return si.spark.createDataFrame([], RANKED_SCHEMA)
         return si.search_bool(should=should, k=size)
 
     if kind == "bool":
@@ -1473,8 +1464,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
                 min_df=int(spec.get("min_doc_freq", 5)),
                 top_n=int(spec.get("max_query_terms", 25)))
             if not terms:
-                return si.spark.createDataFrame(
-                    [], "rank bigint, doc_id bigint, score double")
+                return si.spark.createDataFrame([], RANKED_SCHEMA)
             out = si.search(sorted(set(terms)), size + len(ids),
                             mode=mode)
             out = out.filter(~F.col("doc_id").isin(ids))
@@ -1494,8 +1484,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
                 min_df=int(spec.get("min_doc_freq", 5)),
                 top_n=int(spec.get("max_query_terms", 25)))
             if not terms:
-                return si.spark.createDataFrame(
-                    [], "rank bigint, doc_id bigint, score double")
+                return si.spark.createDataFrame([], RANKED_SCHEMA)
             return si.search(sorted(set(terms)), size, mode=mode)
         if not ids:
             raise ValueError(
@@ -1508,8 +1497,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
             top_n=int(spec.get("max_query_terms", 25)))
         terms = sorted({r["term"] for r in kw.collect()})
         if not terms:
-            return si.spark.createDataFrame(
-                [], "rank bigint, doc_id bigint, score double")
+            return si.spark.createDataFrame([], RANKED_SCHEMA)
         out = si.search(terms, size + len(ids), mode=mode)
         out = out.filter(~F.col("doc_id").isin(ids))
         w = Window.orderBy(F.asc("rank"))
@@ -1559,8 +1547,9 @@ def es_search(indexes, body: dict, size: int = 10, *,
 
     if kind == "boosting":
         # positive scores BM25; negative-matching docs are demoted by
-        # negative_boost — exact over the full positive match set
-        # (SegmentIndex.search_boosting's WAND-probed stop proof)
+        # negative_boost: one filtered weight function under
+        # multiply/multiply (score * negative_boost), exact over the full
+        # positive match set (SegmentIndex.search_function_score)
         nb = float(spec.get("negative_boost", 0.5))
         try:
             pos_t = _or_query_text(spec["positive"])
@@ -1569,8 +1558,14 @@ def es_search(indexes, body: dict, size: int = 10, *,
             raise ValueError(
                 "boosting positive/negative must be OR-matching "
                 "(match / query_string / multi_match)")
-        return one().search_boosting(pos_t, neg_t, size,
-                                     negative_boost=nb)
+        if nb < 0:
+            raise ValueError("negative_boost must be >= 0")
+        si = one()
+        # a negative analyzing to nothing demotes nothing (a match filter
+        # analyzing to nothing would match every doc): identity function
+        neg = si.analyze_query(neg_t)
+        fn = {"filter": neg, "weight": nb} if neg else {"weight": 1.0}
+        return si.search_function_score(pos_t, [fn], size)
 
     if kind == "script_score":
         # ES 7 exact vector search: {"script_score": {"query": {...},
@@ -1620,51 +1615,39 @@ def es_search(indexes, body: dict, size: int = 10, *,
             "doc_id",
             F.round(cosine(F.col("__v"), qlit) + F.lit(const), 6)
             .alias("score"))
-        top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(size)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return top.select(
-            (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-            "doc_id", "score")
+        return _ranked(scored, size)
 
     if kind == "function_score":
         # relevance combined with per-doc boosts — exact over the full
-        # match set via the engine's bounded probes. Two ES shapes:
-        # a functions LIST of filter+weight functions (score_mode /
-        # boost_mode / max_boost), or a single field_value_factor.
+        # match set via the engine's bounded probes. Two ES shapes, one
+        # executor: a functions LIST of filter + weight /
+        # field_value_factor functions (score_mode / boost_mode /
+        # max_boost), or a body-level field_value_factor, which is one
+        # unfiltered function.
         inner = spec.get("query")
         if not inner:
             raise ValueError("function_score needs an inner query")
         fns = spec.get("functions")
-        if fns is not None:
-            mb = spec.get("max_boost")
-            si = one()
-            ik, ispec = next(iter(inner.items()))
-            # a bool inner query routes as its tree (served exactly off
-            # the complete single-scan tree relation); OR-matching kinds
-            # keep the WAND-probed regime
-            iq = (_bool_to_tree(si, ispec) if ik == "bool"
-                  else _or_query_text(inner))
-            return si.search_function_score_fns(
-                iq, list(fns), size,
-                score_mode=str(spec.get("score_mode", "multiply")),
-                boost_mode=str(spec.get("boost_mode", "multiply")),
-                max_boost=float(mb) if mb is not None else None)
-        fvf = spec.get("field_value_factor")
-        if not isinstance(fvf, dict) or "field" not in fvf:
-            raise ValueError(
-                "function_score supports a functions list of "
-                "filter+weight functions, or field_value_factor "
-                "with a field")
+        if fns is None:
+            fvf = spec.get("field_value_factor")
+            if not isinstance(fvf, dict) or "field" not in fvf:
+                raise ValueError(
+                    "function_score needs a functions list or a "
+                    "field_value_factor with a field")
+            fns = [{"field_value_factor": fvf}]
+        mb = spec.get("max_boost")
         si = one()
         ik, ispec = next(iter(inner.items()))
+        # a bool inner query routes as its tree (served exactly off the
+        # complete single-scan tree relation); OR-matching kinds keep
+        # the WAND-probed regime
         iq = (_bool_to_tree(si, ispec) if ik == "bool"
               else _or_query_text(inner))
         return si.search_function_score(
-            iq, fvf["field"], size,
-            factor=float(fvf.get("factor", 1.0)),
-            modifier=str(fvf.get("modifier", "none")),
-            missing=float(fvf.get("missing", 1.0)),
-            boost_mode=str(spec.get("boost_mode", "multiply")))
+            iq, list(fns), size,
+            score_mode=str(spec.get("score_mode", "multiply")),
+            boost_mode=str(spec.get("boost_mode", "multiply")),
+            max_boost=float(mb) if mb is not None else None)
 
     if kind == "dis_max":
         # explicit ES dis_max: each sub-query carries its own text for
@@ -1743,8 +1726,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
         si = one(names[0] if names else None)
         node = _sqs_tree(si, text, dop)
         if node is None:
-            return si.spark.createDataFrame(
-                [], "rank bigint, doc_id bigint, score double")
+            return si.spark.createDataFrame([], RANKED_SCHEMA)
         return si.search_bool_tree(node, k=size)
 
     if kind == "exists":
@@ -1843,11 +1825,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
                   .filter(x.isNotNull())
                   .select("doc_id",
                           F.round(F.lit(boost) * fx, 6).alias("score")))
-        top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(size)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return top.select(
-            (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-            "doc_id", "score")
+        return _ranked(scored, size)
 
     if kind == "terms_set":
         # ES terms_set: {"terms_set": {field: {"terms": [...],
@@ -1879,8 +1857,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
             raise ValueError(
                 "terms_set needs exactly one of "
                 "minimum_should_match_field / minimum_should_match")
-        empty = si.spark.createDataFrame(
-            [], "rank bigint, doc_id bigint, score double")
+        empty = si.spark.createDataFrame([], RANKED_SCHEMA)
         if not toks:
             return empty
         agg = (si._term_scores(toks)
@@ -1903,11 +1880,7 @@ def es_search(indexes, body: dict, size: int = 10, *,
                 return empty
             agg = agg.filter(F.col("_n") >= F.lit(max(m, 1)))
         hits = si._exclude_dead(agg)
-        top = hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(size)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return top.select(
-            (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-            "doc_id", "score")
+        return _ranked(hits, size)
 
     if kind == "pinned":
         # ES pinned query: the listed ids rank FIRST, in list order,
@@ -2036,8 +2009,7 @@ def _es_rescore(indexes, body: dict, rs: dict, size: int, *,
     spark = si.spark
     return spark.createDataFrame(
         pd.DataFrame(out, columns=["rank", "doc_id", "score"])
-        if out else [],
-        "rank bigint, doc_id bigint, score double")
+        if out else [], RANKED_SCHEMA)
 
 
 def _es_collapse(indexes, body: dict, col_spec: dict,
@@ -2391,8 +2363,7 @@ def es_scroll(indexes, body: dict, *, page_size: int = 100,
             pd.DataFrame({
                 "rank": [r["rank"] for r in rows],
                 "doc_id": [r["doc_id"] for r in rows],
-                "score": [r["score"] for r in rows]}),
-            "rank bigint, doc_id bigint, score double")
+                "score": [r["score"] for r in rows]}), RANKED_SCHEMA)
         last = rows[-1]
         cursor = (float(last["score"]), int(last["doc_id"]))
         pages += 1

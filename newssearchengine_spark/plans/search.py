@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import heapq
 import json
+import math
 import os
 
 import numpy as np
@@ -41,6 +42,7 @@ from ..config import AnalyzerConfig
 from .index_build import term_bucket
 
 TOPK_SCHEMA = "doc_id bigint, score double"
+RANKED_SCHEMA = "rank bigint, doc_id bigint, score double"
 
 # Phrase-candidate rows are bounded by the min posting df of the phrase's
 # required terms (a doc containing the phrase contains every term) — known
@@ -379,9 +381,18 @@ def _make_groups_taat(groups: list[list[list[str]]],
     return score_group
 
 
+def _ranked(scored: DataFrame, k: int) -> DataFrame:
+    """(rank, doc_id, score) top-k of a (doc_id, score) relation: the
+    global (score desc, doc_id asc) cut, ranked from 0."""
+    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
+    return topk.select(
+        (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
+        "doc_id", "score")
+
+
 def _eager_topk(rel: DataFrame, out: DataFrame,
-                schema: str = "rank bigint, doc_id bigint, score double"
-                ) -> DataFrame:
+                schema: str = RANKED_SCHEMA) -> DataFrame:
     """Materialize a (tiny, <= k rows) top-k result and release the
     persisted intermediate `rel` — phrase/bool search persist a candidate
     relation shared by a stats action and the scoring plan, and a lazy
@@ -699,9 +710,7 @@ class SegmentIndex:
 
         dfs = self.term_dfs(terms)
         terms = [t for t in terms if dfs.get(t, 0) > 0]
-        empty = self.spark.createDataFrame(
-            [], "rank bigint, doc_id bigint, score double"
-        )
+        empty = self.spark.createDataFrame([], RANKED_SCHEMA)
         if not terms:
             return empty
 
@@ -739,19 +748,13 @@ class SegmentIndex:
                                      kind="mergesort")
                     .head(k).reset_index(drop=True))
             cand.insert(0, "rank", np.arange(len(cand), dtype=np.int64))
-            out = self.spark.createDataFrame(
-                cand, "rank bigint, doc_id bigint, score double")
+            out = self.spark.createDataFrame(cand, RANKED_SCHEMA)
             if with_meta:
                 out = (out.join(self.doc_store(), "doc_id", "left")
                        .orderBy("rank"))
             return out
         per_part = self._by_part(seg).applyInPandas(scorer, TOPK_SCHEMA)
-        topk = per_part.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        out = topk.select(
-            (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-            "doc_id", "score",
-        )
+        out = _ranked(per_part, k)
         if with_meta:
             out = out.join(self.doc_store(), "doc_id", "left").orderBy("rank")
         return out
@@ -782,9 +785,7 @@ class SegmentIndex:
         query into the whole vocabulary."""
         terms = self.expand_prefix(prefix, max_expansions)
         if not terms:
-            return self.spark.createDataFrame(
-                [], "rank bigint, doc_id bigint, score double"
-            )
+            return self.spark.createDataFrame([], RANKED_SCHEMA)
         return self.search(terms, k, mode=mode)
 
     def expand_wildcard(self, pattern: str,
@@ -819,9 +820,7 @@ class SegmentIndex:
         term dictionary, then BM25 over the expansion (bounded like ES)."""
         terms = self.expand_wildcard(pattern, max_expansions)
         if not terms:
-            return self.spark.createDataFrame(
-                [], "rank bigint, doc_id bigint, score double"
-            )
+            return self.spark.createDataFrame([], RANKED_SCHEMA)
         return self.search(terms, k, mode=mode)
 
     def expand_regexp(self, pattern: str,
@@ -861,9 +860,7 @@ class SegmentIndex:
         term / prefix / fuzzy / wildcard / regexp."""
         terms = self.expand_regexp(pattern, max_expansions)
         if not terms:
-            return self.spark.createDataFrame(
-                [], "rank bigint, doc_id bigint, score double"
-            )
+            return self.spark.createDataFrame([], RANKED_SCHEMA)
         return self.search(terms, k, mode=mode)
 
     def expand_fuzzy(self, term: str, *, max_edits: int = 1,
@@ -898,9 +895,7 @@ class SegmentIndex:
                                   prefix_len=prefix_len,
                                   max_expansions=max_expansions)
         if not terms:
-            return self.spark.createDataFrame(
-                [], "rank bigint, doc_id bigint, score double"
-            )
+            return self.spark.createDataFrame([], RANKED_SCHEMA)
         return self.search(terms, k, mode=mode)
 
     def search_phrase(self, phrase, k: int, with_meta: bool = False,
@@ -945,9 +940,7 @@ class SegmentIndex:
             return self._live(k, lambda kk: self.search_phrase(
                 phrase, kk, with_meta=with_meta, slop=slop, _raw=True))
         terms = self.analyze_query(phrase) if isinstance(phrase, str) else list(phrase)
-        empty = self.spark.createDataFrame(
-            [], "rank bigint, doc_id bigint, score double"
-        )
+        empty = self.spark.createDataFrame([], RANKED_SCHEMA)
         if not terms:
             return empty
         slop = int(slop)
@@ -1002,9 +995,7 @@ class SegmentIndex:
         - above the cap: persist the candidate relation, count for the
           phrase df, score distributed; eager top-k releases the cache.
         """
-        empty = self.spark.createDataFrame(
-            [], "rank bigint, doc_id bigint, score double"
-        )
+        empty = self.spark.createDataFrame([], RANKED_SCHEMA)
         release = None
         if bound <= PHRASE_DRIVER_CAP:
             pdf = cand_plan.toPandas()
@@ -1031,12 +1022,7 @@ class SegmentIndex:
                 6,
             ).alias("score"),
         )
-        topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        out = topk.select(
-            (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-            "doc_id", "score",
-        )
+        out = _ranked(scored, k)
         if release is not None:
             out = _eager_topk(release, out)
         return out
@@ -1510,9 +1496,7 @@ class SegmentIndex:
         filt_clauses, meta_clauses = self._parse_filters(filter)
         has_filter = bool(filt_clauses or meta_clauses)
         msm = int(minimum_should_match)
-        empty = self.spark.createDataFrame(
-            [], "rank bigint, doc_id bigint, score double"
-        )
+        empty = self.spark.createDataFrame([], RANKED_SCHEMA)
         if not must_clauses and not should and not has_filter:
             if not must_not:
                 raise ValueError(
@@ -1655,12 +1639,7 @@ class SegmentIndex:
             scores = self._by_part(seg).applyInPandas(
                 scorer, TOPK_SCHEMA)
         rounded = scores.select("doc_id", F.round("score", 6).alias("score"))
-        topk = rounded.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return topk.select(
-            (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-            "doc_id", "score",
-        )
+        return _ranked(rounded, k)
 
     def _bool_pruned(self, must_clauses, should, must_not, *, k,
                      empty, msm: int = 0, filt_clauses=(),
@@ -1732,12 +1711,7 @@ class SegmentIndex:
             return empty
         scores = self.spark.createDataFrame(scores_pdf, TOPK_SCHEMA)
         rounded = scores.select("doc_id", F.round("score", 6).alias("score"))
-        topk = rounded.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return topk.select(
-            (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-            "doc_id", "score",
-        )
+        return _ranked(rounded, k)
 
     def search_mixed(self, groups, k: int, _raw: bool = False) -> DataFrame:
         """OR of AND-groups — the ES mixed AND/OR query_string shape
@@ -1768,9 +1742,7 @@ class SegmentIndex:
             clauses = [c for c in clauses if c]
             if clauses:
                 gs.append(clauses)
-        empty = self.spark.createDataFrame(
-            [], "rank bigint, doc_id bigint, score double"
-        )
+        empty = self.spark.createDataFrame([], RANKED_SCHEMA)
         if not gs:
             return empty
         all_terms = sorted({t for g in gs for c in g for t in c})
@@ -1801,12 +1773,7 @@ class SegmentIndex:
                                    avgdl=avgdl, k=k)
         scores = self._by_part(seg).applyInPandas(scorer, TOPK_SCHEMA)
         rounded = scores.select("doc_id", F.round("score", 6).alias("score"))
-        topk = rounded.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return topk.select(
-            (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-            "doc_id", "score",
-        )
+        return _ranked(rounded, k)
 
     def search_bool_tree(self, node: dict, k: int,
                          _raw: bool = False) -> DataFrame:
@@ -1868,19 +1835,12 @@ class SegmentIndex:
         if not _raw and self.n_deleted():
             return self._live(k, lambda kk: self.search_bool_tree(
                 node, kk, _raw=True))
-        empty = self.spark.createDataFrame(
-            [], "rank bigint, doc_id bigint, score double"
-        )
+        empty = self.spark.createDataFrame([], RANKED_SCHEMA)
         rel = self._bool_tree_rel(node)
         if rel is None:
             return empty
         rounded = rel.select("doc_id", F.round("score", 6).alias("score"))
-        topk = rounded.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return topk.select(
-            (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-            "doc_id", "score",
-        )
+        return _ranked(rounded, k)
 
     def _term_scores(self, terms: list[str],
                      idf_override: dict[str, float] | None = None
@@ -2163,241 +2123,33 @@ class SegmentIndex:
         return (g.filter(matched(root))
                 .select("doc_id", score(root).alias("score")))
 
-    def search_boosting(self, positive, negative, k: int, *,
-                        negative_boost: float = 0.5,
-                        _raw: bool = False) -> DataFrame:
-        """ES `boosting` query: docs matching the positive OR-disjunction
-        score BM25 as usual; docs ALSO matching the negative disjunction
-        have that score multiplied by negative_boost (ES demotes, never
-        excludes). Exact semantics over EVERY positive-matching doc:
-        final = round(bm25(positive) * factor, 6), (score desc, doc_id
-        asc) top-k. The reference issues no boosting body; this is the
-        surrounding ES surface a switching user expects.
-
-        Demotion can promote docs from arbitrarily deep in the positive
-        ranking, so a fixed over-fetch is NOT exact. Two regimes:
-
-        - pruned (default, negative_boost <= 1): probe positive top-m
-          (block-max WAND) with doubling m; negative membership is
-          fetched ONLY for the m candidates via the candidate-part-
-          pruned scan (_scores_for_docs — a hot negative term never
-          contributes its full posting relation). Stop proof: WAND order
-          gives every unscanned doc raw positive score <= the m-th
-          scanned score s_m, and factor <= 1 keeps final <= raw
-          positive; once s_m < (k-th best candidate final) - 1e-6, 6dp
-          HALF_UP rounding (monotone, moves a value < 5e-7) puts every
-          unscanned doc strictly below the rounded top-k, ties included
-          (the _part_topk margin argument). Positive exhausted (< m
-          rows) is also exact: the candidate set is complete.
-        - distributed fallback (pool would exceed BOOL_DRIVER_CAP
-          rows, or negative_boost > 1 where "demotion" is promotion and
-          the bound inverts): complete score_all(positive) relation
-          left-joined to the distinct negative membership — every
-          positive match scored exactly once, no driver gather.
-
-        Both regimes share one Catalyst tail (_boosting_tail), so
-        scores and 6dp rounding are bit-identical (pytest-pinned).
-        """
-        nb = float(negative_boost)
-        if nb < 0:
-            raise ValueError("negative_boost must be >= 0")
-        if not _raw and self.n_deleted():
-            return self._live(k, lambda kk: self.search_boosting(
-                positive, negative, kk, negative_boost=nb, _raw=True))
-        pos = (self.analyze_query(positive) if isinstance(positive, str)
-               else list(positive))
-        neg = (self.analyze_query(negative) if isinstance(negative, str)
-               else list(negative))
-        pos = sorted(set(pos))
-        dfs = self.term_dfs(pos)
-        pos = [t for t in pos if dfs.get(t, 0) > 0]
-        if not pos:
-            return self.spark.createDataFrame(
-                [], "rank bigint, doc_id bigint, score double")
-        ndfs = self.term_dfs(sorted(set(neg)))
-        neg = sorted(t for t in set(neg) if ndfs.get(t, 0) > 0)
-        # sum of positive dfs >= distinct positive matches: when it fits
-        # the driver cap the probe loop is guaranteed to terminate exactly
-        pos_bound = sum(int(dfs[t]) for t in pos)
-        if nb <= 1.0:
-            cap = min(BOOL_DRIVER_CAP, pos_bound)
-            m = min(max(4 * k, 64), cap)
-            while m > 0:
-                cand = (self.search(pos, m, mode="wand", _raw=True)
-                        .toPandas().sort_values("rank"))
-                exhausted = len(cand) < m or m >= pos_bound
-                ids = cand["doc_id"].to_numpy(np.int64)
-                raw = cand["score"].to_numpy(np.float64)
-                is_neg = (np.isin(ids, self._scores_for_docs(neg, ids)
-                                  ["doc_id"].to_numpy(np.int64))
-                          if neg and len(ids) else
-                          np.zeros(len(ids), dtype=bool))
-                final = raw * np.where(is_neg, nb, 1.0)
-                proven = (len(final) >= k and raw[-1] < np.partition(
-                    final, len(final) - k)[len(final) - k] - 1e-6)
-                if exhausted or proven:
-                    rel = self.spark.createDataFrame(
-                        pd.DataFrame({"doc_id": ids, "score": raw,
-                                      "neg": is_neg}),
-                        "doc_id bigint, score double, neg boolean")
-                    return self._boosting_tail(rel, nb, k)
-                if m >= cap:
-                    break
-                m = min(m * 8, cap)
-        rel = self.score_all(pos)
-        if neg:
-            negdocs = (self._term_docs(neg).select("doc_id").distinct()
-                       .withColumn("neg", F.lit(True)))
-            rel = (rel.join(negdocs, "doc_id", "left")
-                   .na.fill({"neg": False}))
-        else:
-            rel = rel.withColumn("neg", F.lit(False))
-        return self._boosting_tail(rel, nb, k)
-
-    def search_function_score(self, query, field: str, k: int, *,
-                              factor: float = 1.0, modifier: str = "none",
-                              missing: float = 1.0,
+    def search_function_score(self, query, functions, k: int, *,
+                              score_mode: str = "multiply",
                               boost_mode: str = "multiply",
+                              max_boost=None,
                               _raw: bool = False) -> DataFrame:
-        """ES `function_score` with a `field_value_factor` function:
-        final = round(bm25(query) OP f(doc_field), 6) over EVERY
-        matching doc, where f = modifier(factor * coalesce(field,
-        missing)), modifier in {none, log1p, sqrt}, OP = boost_mode
-        {multiply, sum} — the boost-by-popularity/recency shape an ES
-        user reaches for next after plain relevance.
+        """ES `function_score` with a FUNCTIONS list — the one executor
+        behind every function_score body and the `boosting` query (the
+        DSL adapter maps boosting to one filtered weight function and a
+        body-level field_value_factor to one unfiltered function).
 
-        Like `boosting`, the per-doc factor can promote docs from
-        arbitrarily deep in the BM25 ranking, so a fixed over-fetch is
-        not exact. Regimes:
-
-        - pruned: one tiny agg reads the corpus-wide min/max of f off
-          the doc store (a column min/max — parquet-footer statistics at
-          scale), then a WAND-probed candidate loop: for multiply (needs
-          f >= 0 corpus-wide, checked against the min) every unscanned
-          doc's final <= s_m * F_max; for sum, <= s_m + F_max — once
-          that bound falls 1e-6 below the k-th candidate final the
-          rounded top-k is proven (same margin argument as
-          search_boosting). Candidate field values arrive via a
-          broadcast join of <= m rows against the doc store.
-        - distributed fallback (pool exceeds BOOL_DRIVER_CAP, or
-          f < 0 somewhere under multiply): complete score_all(query)
-          joined to the doc store's (doc_id, field) columns.
-
-        Both regimes share one Catalyst tail so scores and 6dp rounding
-        are bit-identical (pytest-pinned).
-        """
-        if boost_mode not in ("multiply", "sum"):
-            raise ValueError("boost_mode must be multiply or sum")
-        if modifier not in ("none", "log1p", "sqrt"):
-            raise ValueError("modifier must be none, log1p or sqrt")
-        if not _raw and self.n_deleted():
-            return self._live(k, lambda kk: self.search_function_score(
-                query, field, kk, factor=factor, modifier=modifier,
-                missing=missing, boost_mode=boost_mode, _raw=True))
-        fexpr = F.lit(float(factor)) * F.coalesce(
-            F.col(field).cast("double"), F.lit(float(missing)))
-        if modifier == "log1p":
-            fexpr = F.log1p(fexpr)
-        elif modifier == "sqrt":
-            fexpr = F.sqrt(fexpr)
-        store = self.doc_store().select(
-            "doc_id", fexpr.alias("fval"))
-        if isinstance(query, dict):
-            # bool-TREE inner query: the complete single-scan tree
-            # relation joined to the factor column is exact — no probe
-            rel = self._bool_tree_rel(query)
-            if rel is None:
-                return self.spark.createDataFrame(
-                    [], "rank bigint, doc_id bigint, score double")
-            return self._function_tail(rel.join(store, "doc_id", "left"),
-                                       boost_mode, k)
-        terms = (self.analyze_query(query) if isinstance(query, str)
-                 else list(query))
-        terms = sorted(set(terms))
-        dfs = self.term_dfs(terms)
-        terms = [t for t in terms if dfs.get(t, 0) > 0]
-        if not terms:
-            return self.spark.createDataFrame(
-                [], "rank bigint, doc_id bigint, score double")
-        pos_bound = sum(int(dfs[t]) for t in terms)
-        if pos_bound <= BOOL_DRIVER_CAP:
-            row = store.agg(F.min("fval").alias("lo"),
-                            F.max("fval").alias("hi")).collect()[0]
-            f_lo = float(row["lo"]) if row["lo"] is not None else 0.0
-            f_hi = float(row["hi"]) if row["hi"] is not None else 0.0
-            prunable = boost_mode == "sum" or f_lo >= 0.0
-            m = min(max(4 * k, 64), pos_bound)
-            while prunable and m > 0:
-                cand = (self.search(terms, m, mode="wand", _raw=True)
-                        .toPandas().sort_values("rank"))
-                exhausted = len(cand) < m or m >= pos_bound
-                ids = cand["doc_id"].to_numpy(np.int64)
-                raw = cand["score"].to_numpy(np.float64)
-                cdf = self.spark.createDataFrame(
-                    pd.DataFrame({"doc_id": ids}), "doc_id bigint")
-                fv = {r["doc_id"]: r["fval"] for r in store.join(
-                    F.broadcast(cdf), "doc_id", "left_semi").collect()}
-                fvals = np.array([fv.get(int(i), 0.0) for i in ids])
-                final = (raw * fvals if boost_mode == "multiply"
-                         else raw + fvals)
-                if len(final) >= k:
-                    theta = np.partition(
-                        final, len(final) - k)[len(final) - k]
-                    bound = (raw[-1] * f_hi if boost_mode == "multiply"
-                             else raw[-1] + f_hi)
-                    proven = bound < theta - 1e-6
-                else:
-                    proven = False
-                if exhausted or proven:
-                    rel = self.spark.createDataFrame(
-                        pd.DataFrame({"doc_id": ids, "score": raw,
-                                      "fval": fvals}),
-                        "doc_id bigint, score double, fval double")
-                    return self._function_tail(rel, boost_mode, k)
-                if m >= pos_bound:
-                    break
-                m = min(m * 8, pos_bound)
-        rel = self.score_all(terms).join(store, "doc_id", "left")
-        return self._function_tail(rel, boost_mode, k)
-
-    def _function_tail(self, rel: DataFrame, boost_mode: str,
-                       k: int) -> DataFrame:
-        """Shared combine + round + top-k tail over (doc_id, score,
-        fval) — both search_function_score regimes run these exact
-        expressions."""
-        fv = F.coalesce(F.col("fval"), F.lit(0.0))
-        combined = (F.col("score") * fv if boost_mode == "multiply"
-                    else F.col("score") + fv)
-        rounded = rel.select(
-            "doc_id", F.round(combined, 6).alias("score"))
-        topk = rounded.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return topk.select(
-            (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-            "doc_id", "score")
-
-    def search_function_score_fns(self, query, functions, k: int, *,
-                                  score_mode: str = "multiply",
-                                  boost_mode: str = "multiply",
-                                  max_boost=None,
-                                  _raw: bool = False) -> DataFrame:
-        """ES `function_score` with a FUNCTIONS list: filter+weight
-        functions and (r5) filter+`field_value_factor` functions — each
-        function fires on the docs matching its filter-context clause
-        (no filter = every doc) and contributes
+        Filter+weight functions and filter+`field_value_factor`
+        functions: each function fires on the docs matching its
+        filter-context clause (no filter = every doc) and contributes
         s_i = weight_i * u_i, where u_i is the underlying function
         value (1 for weight-only, modifier(factor * coalesce(field,
-        missing)) for field_value_factor). Firing contributions combine
-        under `score_mode` {multiply, sum, max, min, first, avg} — avg
-        is ES's WEIGHTED mean sum(w_i*u_i)/sum(w_i) over the firing
-        functions (weights double as averaging weights; weight-only
-        functions therefore average to exactly 1, the documented ES
-        quirk), so zero/negative weights reject under avg (the mean
-        would be undefined at weightSum 0). The combination is capped
-        at `max_boost`, and `boost_mode` {multiply, sum} applies it to
-        the BM25 query score. A doc matched by NO function keeps its
-        query score unchanged (the documented ES behavior), so the cap
-        never touches unboosted docs.
+        missing)) for field_value_factor). A NULL u_i — log1p of a value
+        <= -1, or a doc with no doc-store row — counts as 0. Firing
+        contributions combine under `score_mode` {multiply, sum, max,
+        min, first, avg} — avg is ES's WEIGHTED mean sum(w_i*u_i)/sum(w_i)
+        over the firing functions (weights double as averaging weights;
+        weight-only functions therefore average to exactly 1, the
+        documented ES quirk), so zero/negative weights reject under avg
+        (the mean would be undefined at weightSum 0). The combination is
+        capped at `max_boost`, and `boost_mode` {multiply, sum} applies
+        it to the BM25 query score. A doc matched by NO function keeps
+        its query score unchanged (the documented ES behavior), so the
+        cap never touches unboosted docs.
 
         Filters reuse the bool filter-context grammar (_parse_filters):
         {"match": ...} clauses are postings MEMBERSHIP (no scoring
@@ -2405,24 +2157,24 @@ class SegmentIndex:
         doc_store parquet. A match clause whose text analyzes to
         nothing matches ALL docs (same leniency as the bool adapter).
 
-        Like field_value_factor, a weight can promote docs from
-        arbitrarily deep in the BM25 ranking, so regimes mirror
-        search_function_score:
+        A function can promote docs from arbitrarily deep in the BM25
+        ranking, so a fixed over-fetch is not exact. Regimes:
 
-        - pruned (pos_bound <= BOOL_DRIVER_CAP, every weight >= 0, and
-          NO field_value_factor function — a per-doc factor needs the
-          complete relation, like search_function_score's fallback):
-          WAND-probed candidate loop; the max achievable combined
-          factor F_hi is computed from the weights alone on the driver
-          (multiply: product of weights > 1; sum: total; max/min/first:
-          max weight — all upper bounds over non-empty firing subsets
-          when weights are non-negative, then capped at max_boost and
-          floored at the no-match factor), so every unscanned doc's
-          final <= s_m * max(F_hi, 1) (multiply) or s_m + max(F_hi, 0)
-          (sum) — once that falls 1e-6 below the k-th candidate final
-          the rounded top-k is proven. Candidate membership arrives via
-          broadcast semi-joins of <= m ids against the pruned postings
-          scan / doc_store.
+        - pruned (pos_bound <= BOOL_DRIVER_CAP and a finite bound
+          exists): a WAND-probed candidate loop. _combined_bound gives
+          F_hi >= the combined factor of any doc from each function's
+          largest contribution w_i*u_i (field_value_factor ranges from
+          ONE doc-store min/max aggregate), so every unscanned doc's
+          final <= s_m * F_hi (multiply) or s_m + F_hi (sum). The <= m
+          candidates run through the shared tail; once that bound falls
+          1e-6 below the k-th rounded candidate final, 6dp HALF_UP
+          rounding (monotone, moves a value < 5e-7) puts every unscanned
+          doc strictly below the rounded top-k, ties included. A
+          positive side exhausted in < m rows is exact as well. Match
+          membership for the <= m candidates comes from the candidate-
+          part-pruned scan (_scores_for_docs — a hot filter term never
+          decodes its full posting list); metadata membership and
+          field values from broadcast semi-joins against the doc store.
         - distributed fallback: complete score_all(query) left-joined
           to each function's full membership relation.
 
@@ -2472,13 +2224,11 @@ class SegmentIndex:
             raise ValueError(
                 "score_mode 'avg' needs every weight > 0 (ES's "
                 "weighted mean is undefined at zero total weight)")
-        has_fvf = any(p[3] is not None for p in parsed)
         mb = float(max_boost) if max_boost is not None else None
         if not _raw and self.n_deleted():
-            return self._live(k, lambda kk: self.search_function_score_fns(
+            return self._live(k, lambda kk: self.search_function_score(
                 query, functions, kk, score_mode=score_mode,
                 boost_mode=boost_mode, max_boost=max_boost, _raw=True))
-        n = len(parsed)
         if isinstance(query, dict):
             # bool-TREE inner query (the ES function_score-over-bool
             # composition): the single-scan tree relation is already the
@@ -2487,9 +2237,8 @@ class SegmentIndex:
             # no pruned regime needed
             rel = self._bool_tree_rel(query)
             if rel is None:
-                return self.spark.createDataFrame(
-                    [], "rank bigint, doc_id bigint, score double")
-            return self._functions_over_rel(rel, parsed, ws, score_mode,
+                return self.spark.createDataFrame([], RANKED_SCHEMA)
+            return self._functions_over_rel(rel, parsed, score_mode,
                                             boost_mode, mb, k)
         terms = (self.analyze_query(query) if isinstance(query, str)
                  else list(query))
@@ -2497,124 +2246,135 @@ class SegmentIndex:
         dfs = self.term_dfs(terms)
         terms = [t for t in terms if dfs.get(t, 0) > 0]
         if not terms:
-            return self.spark.createDataFrame(
-                [], "rank bigint, doc_id bigint, score double")
+            return self.spark.createDataFrame([], RANKED_SCHEMA)
         pos_bound = sum(int(dfs[t]) for t in terms)
-        prunable = (pos_bound <= BOOL_DRIVER_CAP
-                    and all(w >= 0.0 for w in ws) and not has_fvf)
-        if prunable:
-            if score_mode == "multiply":
-                gt1 = [w for w in ws if w > 1.0]
-                f_hi = max(ws)
-                if gt1:
-                    f_hi = 1.0
-                    for w in gt1:
-                        f_hi *= w
-            elif score_mode == "sum":
-                f_hi = sum(ws)
-            elif score_mode == "avg":
-                # weighted mean of weight-only contributions (u_i = 1)
-                # is exactly 1 over any firing subset
-                f_hi = 1.0
-            else:
-                f_hi = max(ws)
-            if mb is not None:
-                f_hi = min(f_hi, mb)
-            hi_eff = (max(f_hi, 1.0) if boost_mode == "multiply"
-                      else max(f_hi, 0.0))
-            m = min(max(4 * k, 64), pos_bound)
-            while m > 0:
-                cand = (self.search(terms, m, mode="wand", _raw=True)
-                        .toPandas().sort_values("rank"))
-                exhausted = len(cand) < m or m >= pos_bound
-                ids = cand["doc_id"].to_numpy(np.int64)
-                raw = cand["score"].to_numpy(np.float64)
-                cdf = F.broadcast(self.spark.createDataFrame(
-                    pd.DataFrame({"doc_id": ids}), "doc_id bigint"))
-                flags = []
-                for w, fc, mc, _fvf in parsed:
-                    if not fc and not mc:
-                        flags.append(np.ones(len(ids), dtype=bool))
-                        continue
-                    member = None
-                    for toks in fc:
-                        got = {r["doc_id"] for r in self._term_docs(toks)
-                               .select("doc_id").distinct()
-                               .join(cdf, "doc_id", "left_semi").collect()}
-                        member = got if member is None else (member & got)
-                    if mc:
-                        got = {r["doc_id"] for r in self.doc_store()
-                               .filter(_meta_filter_pred(mc))
-                               .select("doc_id")
-                               .join(cdf, "doc_id", "left_semi").collect()}
-                        member = got if member is None else (member & got)
-                    if member:
-                        arr = np.fromiter(member, np.int64, len(member))
-                        flags.append(np.isin(ids, arr))
-                    else:
-                        flags.append(np.zeros(len(ids), dtype=bool))
-                matched = np.zeros(len(ids), dtype=bool)
-                for f in flags:
-                    matched |= f
-                if score_mode == "multiply":
-                    comb = np.ones(len(ids))
-                    for f, w in zip(flags, ws):
-                        comb *= np.where(f, w, 1.0)
-                elif score_mode == "sum":
-                    comb = np.zeros(len(ids))
-                    for f, w in zip(flags, ws):
-                        comb += np.where(f, w, 0.0)
-                elif score_mode == "max":
-                    comb = np.full(len(ids), -np.inf)
-                    for f, w in zip(flags, ws):
-                        comb = np.maximum(comb, np.where(f, w, -np.inf))
-                elif score_mode == "min":
-                    comb = np.full(len(ids), np.inf)
-                    for f, w in zip(flags, ws):
-                        comb = np.minimum(comb, np.where(f, w, np.inf))
-                elif score_mode == "avg":
-                    # weight-only (fvf never reaches this regime):
-                    # sum(w*1)/sum(w) over firing = 1 wherever matched
-                    comb = np.ones(len(ids))
-                else:  # first
-                    comb = np.zeros(len(ids))
-                    assigned = np.zeros(len(ids), dtype=bool)
-                    for f, w in zip(flags, ws):
-                        take = f & ~assigned
-                        comb[take] = w
-                        assigned |= f
-                if mb is not None:
-                    comb = np.minimum(comb, mb)
-                final = np.where(
-                    matched,
-                    raw * comb if boost_mode == "multiply" else raw + comb,
-                    raw)
-                if len(final) >= k:
-                    theta = np.partition(
-                        final, len(final) - k)[len(final) - k]
-                    bound = (raw[-1] * hi_eff
-                             if boost_mode == "multiply"
-                             else raw[-1] + hi_eff)
-                    proven = bound < theta - 1e-6
-                else:
-                    proven = False
-                if exhausted or proven:
-                    pdf = pd.DataFrame({"doc_id": ids, "score": raw})
-                    for i, f in enumerate(flags):
-                        pdf[f"f{i}"] = f
-                    schema = ("doc_id bigint, score double, "
-                              + ", ".join(f"f{i} boolean"
-                                          for i in range(n)))
-                    rel = self.spark.createDataFrame(pdf, schema)
-                    return self._functions_tail(
-                        rel, parsed, score_mode, boost_mode, mb, k)
-                if m >= pos_bound:
-                    break
-                m = min(m * 8, pos_bound)
-        return self._functions_over_rel(self.score_all(terms), parsed, ws,
+        hi = (self._combined_bound(parsed, score_mode, boost_mode, mb)
+              if pos_bound <= BOOL_DRIVER_CAP else None)
+        m = min(max(4 * k, 64), pos_bound)
+        while hi is not None:
+            cand = (self.search(terms, m, mode="wand", _raw=True)
+                    .toPandas().sort_values("rank"))
+            exhausted = len(cand) < m or m >= pos_bound
+            ids = cand["doc_id"].to_numpy(np.int64)
+            raw = cand["score"].to_numpy(np.float64)
+            pdf, schema = self._function_inputs(parsed, ids, raw)
+            top = self._functions_tail(
+                self.spark.createDataFrame(pdf, schema), parsed,
+                score_mode, boost_mode, mb, k).collect()
+            proven = 0 < k == len(top) and top[-1]["score"] - 1e-6 > (
+                raw[-1] * hi if boost_mode == "multiply" else raw[-1] + hi)
+            if exhausted or proven:
+                return self.spark.createDataFrame(top, RANKED_SCHEMA)
+            m = min(m * 8, pos_bound)
+        return self._functions_over_rel(self.score_all(terms), parsed,
                                         score_mode, boost_mode, mb, k)
 
-    def _functions_over_rel(self, rel: DataFrame, parsed: list, ws: list,
+    @staticmethod
+    def _fvf_columns(parsed: list) -> list:
+        """The v{i} value column of every field_value_factor function,
+        as doc-store expressions (null where the modifier is undefined,
+        e.g. log1p of a value <= -1)."""
+        cols = []
+        for i, (_w, _fc, _mc, fvf) in enumerate(parsed):
+            if fvf is None:
+                continue
+            field, factor, modifier, missing = fvf
+            v = F.lit(factor) * F.coalesce(
+                F.col(field).cast("double"), F.lit(missing))
+            if modifier == "log1p":
+                v = F.log1p(v)
+            elif modifier == "sqrt":
+                v = F.sqrt(v)
+            cols.append(v.alias(f"v{i}"))
+        return cols
+
+    def _combined_bound(self, parsed: list, score_mode: str,
+                        boost_mode: str, mb):
+        """H such that every doc's final score is <= s * H (multiply) or
+        s + H (sum) for its query score s >= 0, or None when no finite
+        bound is known (the pruned regime is then unavailable).
+
+        Function i contributes s_i in [lo_i, hi_i] = w_i * [u_lo, u_hi],
+        where u is 1 for weight-only functions and the corpus-wide
+        min/max of the field_value_factor value otherwise (ONE doc-store
+        aggregate over every such function; widened to include 0, the
+        value of a null factor). The bound F_hi on the combined factor
+        over any non-empty firing set: multiply — the product of the
+        hi_i > 1 (else the largest hi_i), kept only when every lo_i >= 0
+        or there is one function; sum — the sum of the positive hi_i
+        (else the largest); avg — the largest u_hi (a weighted mean with
+        weights > 0); max/min/first — the largest hi_i; then capped at
+        max_boost. A doc no function matches keeps s (factor 1 under
+        multiply, 0 under sum) unless an unfiltered function fires on
+        every doc."""
+        urange = [(1.0, 1.0)] * len(parsed)
+        vcols = self._fvf_columns(parsed)
+        if vcols:
+            fv = [i for i, p in enumerate(parsed) if p[3] is not None]
+            row = self.doc_store().select(*vcols).agg(
+                *[F.min(f"v{i}") for i in fv],
+                *[F.max(f"v{i}") for i in fv]).collect()[0]
+            for j, i in enumerate(fv):
+                lo, hi = row[j], row[len(fv) + j]
+                urange[i] = (min(lo or 0.0, 0.0), max(hi or 0.0, 0.0))
+        if not all(math.isfinite(b) for r in urange for b in r):
+            return None
+        spans = [(p[0] * lo, p[0] * hi) for p, (lo, hi) in zip(parsed, urange)]
+        los = [min(a, b) for a, b in spans]
+        his = [max(a, b) for a, b in spans]
+        if score_mode == "multiply":
+            if len(parsed) > 1 and min(los) < 0.0:
+                return None  # two negative s_i multiply past every hi_i
+            gt1 = [b for b in his if b > 1.0]
+            f_hi = math.prod(gt1) if gt1 else max(his)
+        elif score_mode == "sum":
+            pos = [b for b in his if b > 0.0]
+            f_hi = sum(pos) if pos else max(his)
+        elif score_mode == "avg":
+            f_hi = max(hi for _lo, hi in urange)
+        else:
+            f_hi = max(his)
+        if mb is not None:
+            f_hi = min(f_hi, mb)
+        every_doc = any(not fc and not mc for _w, fc, mc, _f in parsed)
+        if boost_mode == "multiply":
+            return max(f_hi, 0.0 if every_doc else 1.0)
+        return f_hi if every_doc else max(f_hi, 0.0)
+
+    def _function_inputs(self, parsed: list, ids: "np.ndarray",
+                         raw: "np.ndarray") -> tuple:
+        """The tail's input for <= m probe candidates as a pandas frame
+        (doc_id, score, f{i} membership flags, v{i} field values with
+        nulls as 0) and its Spark schema. Match filters use the
+        candidate-part-pruned scan; metadata filters and field values
+        one broadcast semi-join each against the doc store."""
+        pdf = pd.DataFrame({"doc_id": ids, "score": raw})
+        schema = ["doc_id bigint", "score double"]
+        cdf = F.broadcast(self.spark.createDataFrame(
+            pd.DataFrame({"doc_id": ids}), "doc_id bigint"))
+        for i, (_w, fc, mc, _fvf) in enumerate(parsed):
+            flag = np.ones(len(ids), dtype=bool)
+            for toks in fc:
+                got = self._scores_for_docs(toks, ids)["doc_id"]
+                flag &= np.isin(ids, got.to_numpy(np.int64))
+            if mc:
+                got = [r["doc_id"] for r in self.doc_store()
+                       .filter(_meta_filter_pred(mc)).select("doc_id")
+                       .join(cdf, "doc_id", "left_semi").collect()]
+                flag &= np.isin(ids, np.array(got, dtype=np.int64))
+            pdf[f"f{i}"] = flag
+            schema.append(f"f{i} boolean")
+        vcols = self._fvf_columns(parsed)
+        if vcols:
+            vals = (self.doc_store().select("doc_id", *vcols)
+                    .join(cdf, "doc_id", "left_semi").toPandas())
+            vnames = [c for c in vals.columns if c != "doc_id"]
+            pdf = pdf.merge(vals, on="doc_id", how="left")
+            pdf[vnames] = pdf[vnames].fillna(0.0)
+            schema += [f"{c} double" for c in vnames]
+        return pdf, ", ".join(schema)
+
+    def _functions_over_rel(self, rel: DataFrame, parsed: list,
                             score_mode: str, boost_mode: str, mb,
                             k: int) -> DataFrame:
         """Exact function_score over a COMPLETE (doc_id, score) match
@@ -2622,19 +2382,7 @@ class SegmentIndex:
         a boolean flag (plus, for field_value_factor functions, ONE
         doc-store join carrying every needed v{i} value column), then
         the shared Catalyst tail."""
-        vcols = []
-        for i, p in enumerate(parsed):
-            fvf = p[3]
-            if fvf is None:
-                continue
-            field, factor, modifier, missing = fvf
-            vexpr = F.lit(factor) * F.coalesce(
-                F.col(field).cast("double"), F.lit(missing))
-            if modifier == "log1p":
-                vexpr = F.log1p(vexpr)
-            elif modifier == "sqrt":
-                vexpr = F.sqrt(vexpr)
-            vcols.append(vexpr.alias(f"v{i}"))
+        vcols = self._fvf_columns(parsed)
         if vcols:
             rel = rel.join(self.doc_store().select("doc_id", *vcols),
                            "doc_id", "left")
@@ -2662,16 +2410,16 @@ class SegmentIndex:
                         k: int) -> DataFrame:
         """Shared combine + round + top-k tail over (doc_id, score,
         f0..f{n-1} boolean [, v{i} double for field_value_factor
-        functions]) — both search_function_score_fns regimes run these
+        functions]) — both search_function_score regimes run these
         exact expressions, so scores are bit-identical across regimes.
-        Function i contributes s_i = w_i * u_i (u_i = v{i} or 1). A doc
-        with no firing function keeps its query score (uncapped — the
-        ES no-match contract)."""
+        Function i contributes s_i = w_i * u_i (u_i = coalesce(v{i}, 0)
+        or 1). A doc with no firing function keeps its query score
+        (uncapped — the ES no-match contract)."""
         n = len(parsed)
         ws = [p[0] for p in parsed]
         flags = [F.coalesce(F.col(f"f{i}"), F.lit(False)) for i in range(n)]
-        us = [F.col(f"v{i}") if p[3] is not None else F.lit(1.0)
-              for i, p in enumerate(parsed)]
+        us = [F.coalesce(F.col(f"v{i}"), F.lit(0.0)) if p[3] is not None
+              else F.lit(1.0) for i, p in enumerate(parsed)]
         sl = [F.lit(float(w)) * u for w, u in zip(ws, us)]
         matched = flags[0]
         for fl in flags[1:]:
@@ -2709,30 +2457,10 @@ class SegmentIndex:
             combined = F.least(combined, F.lit(float(mb)))
         op = (F.col("score") * combined if boost_mode == "multiply"
               else F.col("score") + combined)
-        rounded = rel.select(
+        return _ranked(rel.select(
             "doc_id",
             F.round(F.when(matched, op).otherwise(F.col("score")),
-                    6).alias("score"))
-        topk = rounded.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return topk.select(
-            (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-            "doc_id", "score")
-
-    def _boosting_tail(self, rel: DataFrame, nb: float, k: int) -> DataFrame:
-        """Shared demote + round + top-k tail over (doc_id, score, neg) —
-        both search_boosting regimes run these exact expressions."""
-        rounded = rel.select(
-            "doc_id",
-            F.round(
-                F.col("score")
-                * F.when(F.col("neg"), F.lit(nb)).otherwise(F.lit(1.0)),
-                6).alias("score"))
-        topk = rounded.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        return topk.select(
-            (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-            "doc_id", "score")
+                    6).alias("score")), k)
 
     def explain(self, query, doc_ids: list[int]) -> DataFrame:
         """Per-term BM25 score breakdown for specific docs — the engine-path
@@ -2823,9 +2551,7 @@ class SegmentIndex:
                 phrase, kk, max_expansions=max_expansions, slop=slop,
                 _raw=True))
         terms = self.analyze_query(phrase) if isinstance(phrase, str) else list(phrase)
-        empty = self.spark.createDataFrame(
-            [], "rank bigint, doc_id bigint, score double"
-        )
+        empty = self.spark.createDataFrame([], RANKED_SCHEMA)
         if not terms:
             return empty
         slop = int(slop)
@@ -3108,12 +2834,7 @@ def _combine_dismax(filled: DataFrame, cols: list[str],
         best + F.lit(float(tie_breaker)) * (total - best), 6
     ).alias("score")
     out = filled.select("doc_id", combined)
-    topk = out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return topk.select(
-        (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-        "doc_id", "score",
-    )
+    return _ranked(out, k)
 
 
 def search_cross_fields(field_indexes: dict, query, k: int, *,
@@ -3167,8 +2888,7 @@ def search_cross_fields(field_indexes: dict, query, k: int, *,
     terms = (si0.analyze_query(query) if isinstance(query, str)
              else list(query))
     terms = sorted(set(terms))
-    empty = si0.spark.createDataFrame(
-        [], "rank bigint, doc_id bigint, score double")
+    empty = si0.spark.createDataFrame([], RANKED_SCHEMA)
     if not terms:
         return empty
     dfs_f = {n: si.term_dfs(terms) for n, si in field_indexes.items()}
@@ -3200,11 +2920,7 @@ def search_cross_fields(field_indexes: dict, query, k: int, *,
         .alias("s"))
     scored = (blended.groupBy("doc_id")
               .agg(F.round(F.sum("s"), 6).alias("score")))
-    top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return top.select(
-        (F.row_number().over(w) - 1).cast("bigint").alias("rank"),
-        "doc_id", "score")
+    return _ranked(scored, k)
 
 
 def _dismax_full(field_indexes: dict, query, k: int, *,
@@ -3297,8 +3013,7 @@ def search_dismax_bool(field_indexes: dict, groups, k: int, *,
         scored = s if scored is None else scored.join(
             s, "doc_id", "full_outer")
     if scored is None:
-        return spark.createDataFrame(
-            [], "rank bigint, doc_id bigint, score double")
+        return spark.createDataFrame([], RANKED_SCHEMA)
     filled = scored.na.fill(0.0, cols)
     return _combine_dismax(filled, cols, float(tie_breaker), k)
 
@@ -3359,8 +3074,7 @@ def search_dismax_phrase(field_indexes: dict, text: str, k: int, *,
         scored = s if scored is None else scored.join(
             s, "doc_id", "full_outer")
     if scored is None:
-        return spark.createDataFrame(
-            [], "rank bigint, doc_id bigint, score double")
+        return spark.createDataFrame([], RANKED_SCHEMA)
     filled = scored.na.fill(0.0, cols)
     return _combine_dismax(filled, cols, float(tie_breaker), k)
 
@@ -3415,9 +3129,7 @@ def _dismax_pruned(field_indexes: dict, query, k: int, *,
         cand.update(r["doc_id"] for r in rows)
     spark = next(iter(field_indexes.values())).spark
     if not cand:
-        return spark.createDataFrame(
-            [], "rank bigint, doc_id bigint, score double"
-        )
+        return spark.createDataFrame([], RANKED_SCHEMA)
     ids = np.sort(np.fromiter(cand, dtype=np.int64))
     merged = pd.DataFrame({"doc_id": ids})
     cols = []
@@ -3454,9 +3166,7 @@ def _dismax_pruned(field_indexes: dict, query, k: int, *,
         if n_above < k:
             return None  # threshold proof failed -> exact fallback
     out = [(i, r["doc_id"], r["score"]) for i, r in enumerate(real[:k])]
-    return spark.createDataFrame(
-        out, "rank bigint, doc_id bigint, score double"
-    )
+    return spark.createDataFrame(out, RANKED_SCHEMA)
 
 
 def _make_phrase_matcher(phrase: list[str], last_alts: list[str] | None = None):

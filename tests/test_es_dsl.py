@@ -10,6 +10,8 @@ Body shapes copied verbatim from the reference:
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -954,7 +956,9 @@ def test_function_score_and_exists(two_field, monkeypatch):
     n = es_search(si, {"exists": {"field": "repo"}}, 400).count()
     assert n == two.count()
     with pytest.raises(ValueError, match="boost_mode"):
-        si.search_function_score("node", "content_len", 5, boost_mode="max")
+        si.search_function_score(
+            "node", [{"field_value_factor": {"field": "content_len"}}], 5,
+            boost_mode="max")
 
 
 def test_match_operator_and_msm_boost(two_field):
@@ -1542,16 +1546,143 @@ def test_function_score_functions_list(two_field, monkeypatch):
             assert r["score"] == pytest.approx(fin, abs=2e-6)
 
     with pytest.raises(ValueError, match="avg"):
-        si.search_function_score_fns(
+        si.search_function_score(
             "node", [{"weight": 0.0}], 5, score_mode="avg")
     with pytest.raises(ValueError, match="unsupported function keys"):
-        si.search_function_score_fns(
+        si.search_function_score(
             "node", [{"random_score": {}, "weight": 2.0}], 5)
     with pytest.raises(ValueError, match="boost_mode"):
-        si.search_function_score_fns("node", fns, 5, boost_mode="max")
+        si.search_function_score("node", fns, 5, boost_mode="max")
     with pytest.raises(ValueError, match="non-empty"):
-        si.search_function_score_fns("node", [], 5)
+        si.search_function_score("node", [], 5)
 
+
+
+def test_function_score_probe_regime_serves_folded_shapes(two_field,
+                                                          monkeypatch):
+    """boosting, a body-level field_value_factor (multiply, f >= 0) and a
+    functions list mixing weight and field_value_factor functions all
+    run on the one executor's WAND-probed regime at default caps (a
+    score_all spy that raises proves no complete-relation fallback ran),
+    each row-identical to the forced complete-relation regime."""
+    from newssearchengine_spark.plans import search as search_mod
+
+    _, idxs = two_field
+    si = idxs["text"]
+    q = {"match": {"text": "node cursor"}}
+    shard = {"match": {"text": "shard"}}
+    fvf = {"field": "content_len", "factor": 0.01}
+    queries = {
+        "boosting": {"boosting": {
+            "positive": q, "negative": shard, "negative_boost": 0.3}},
+        "boosting_promote": {"boosting": {
+            "positive": q, "negative": shard, "negative_boost": 1.5}},
+        "field_value_factor": {"function_score": {
+            "query": q, "field_value_factor": fvf,
+            "boost_mode": "multiply"}},
+        "mixed_functions": {"function_score": {
+            "query": q,
+            "functions": [
+                {"filter": {"range": {"content_len": {"gte": 300}}},
+                 "weight": 1.5},
+                {"filter": shard, "weight": 2.0,
+                 "field_value_factor": fvf}],
+            "score_mode": "sum", "max_boost": 50.0}},
+    }
+
+    def no_score_all(self, query):
+        raise AssertionError("complete-relation fallback ran")
+
+    for name, query in queries.items():
+        body = {"query": query}
+        monkeypatch.setattr(search_mod.SegmentIndex, "score_all",
+                            no_score_all)
+        got = es_search(si, body, size=15).collect()
+        monkeypatch.undo()
+        monkeypatch.setattr(search_mod, "BOOL_DRIVER_CAP", -1)
+        dist = es_search(si, body, size=15).collect()
+        monkeypatch.undo()
+        assert got, name
+        assert [tuple(r) for r in got] == [tuple(r) for r in dist], name
+
+
+def test_function_score_null_factor_counts_as_zero(two_field, monkeypatch):
+    """A field_value_factor value that is null — log1p of a value <= -1,
+    here a negative factor driving content_len below -1 on the longer
+    half of the matches — counts as 0 in both regimes, for the body-level
+    shape and inside a functions list, against a pure-python oracle."""
+    from newssearchengine_spark.oracle import pure
+    from newssearchengine_spark.plans import search as search_mod
+
+    two, idxs = two_field
+    si = idxs["text"]
+    raw = {r["doc_id"]: r["text"]
+           for r in two.select("doc_id", "text").collect()}
+    oidx = pure.OracleIndex.build(raw, si.analyzer)
+    qterms = sorted(set(pure.analyze("node cursor", si.analyzer)))
+    match = [d for d in raw
+             if set(qterms) & set(pure.analyze(raw[d], si.analyzer))]
+    factor = -1.0 / sorted(len(raw[d]) for d in match)[len(match) // 2]
+    vals = {d: factor * len(raw[d]) for d in match}
+    assert any(v <= -1.0 for v in vals.values())
+    assert any(v > -1.0 for v in vals.values())
+    u = {d: math.log1p(v) if v > -1.0 else 0.0 for d, v in vals.items()}
+    fvf = {"field": "content_len", "factor": factor, "modifier": "log1p"}
+    q = {"match": {"text": "node cursor"}}
+    k = 15
+    cases = [
+        ({"query": q, "field_value_factor": fvf,
+          "boost_mode": "multiply"},
+         lambda d: oidx.score(qterms, d) * u[d]),
+        ({"query": q, "functions": [{"field_value_factor": fvf,
+                                     "weight": 2.0}],
+          "boost_mode": "sum"},
+         lambda d: oidx.score(qterms, d) + 2.0 * u[d]),
+    ]
+    for spec, final in cases:
+        body = {"query": {"function_score": spec}}
+        got = es_search(si, body, size=k).collect()
+        monkeypatch.setattr(search_mod, "BOOL_DRIVER_CAP", -1)
+        dist = es_search(si, body, size=k).collect()
+        monkeypatch.undo()
+        assert [tuple(r) for r in got] == [tuple(r) for r in dist]
+        want = sorted(((d, final(d)) for d in match),
+                      key=lambda t: (-round(t[1], 6), t[0]))[:k]
+        assert [r["doc_id"] for r in got] == [d for d, _ in want]
+        for r, (_, fin) in zip(got, want):
+            assert r["score"] == pytest.approx(fin, abs=2e-6)
+
+
+def test_boosting_empty_negative_demotes_nothing(two_field):
+    """boosting keeps its own rule for a negative that analyzes to no
+    tokens: nothing is demoted. The function_score match filter it maps
+    to would match every doc instead, which the second body pins. A
+    negative negative_boost still raises."""
+    _, idxs = two_field
+    si = idxs["text"]
+    q = {"match": {"text": "node cursor"}}
+    assert si.analyze_query("!!! ???") == []
+    empty = {"match": {"text": "!!! ???"}}
+    got = es_search(si, {"query": {"boosting": {
+        "positive": q, "negative": empty, "negative_boost": 0.3}}},
+        size=15).collect()
+    buf = (si.search(["cursor", "node"], 30)
+           .select("doc_id", F.round("score", 6).alias("score")).collect())
+    plain = sorted(((r["doc_id"], r["score"]) for r in buf),
+                   key=lambda t: (-t[1], t[0]))[:15]
+    assert [(r["doc_id"], r["score"]) for r in got] == plain
+
+    every = es_search(si, {"query": {"function_score": {
+        "query": q, "functions": [{"filter": empty, "weight": 0.3}]}}},
+        size=15).collect()
+    assert [r["doc_id"] for r in every] == [d for d, _ in plain]
+    for r, (_, s) in zip(every, plain):
+        assert r["score"] == pytest.approx(0.3 * s, abs=2e-6)
+
+    with pytest.raises(ValueError, match="negative_boost"):
+        es_search(si, {"query": {"boosting": {
+            "positive": q, "negative": {"match": {"text": "shard"}},
+            "negative_boost": -0.5}}}, 5)
 
 def test_dis_max_per_field_texts(two_field):
     """Explicit dis_max: each sub-query's text scores its own field

@@ -26,6 +26,7 @@ surface with randomized depth.
 
 from __future__ import annotations
 
+import math
 import random
 
 import pytest
@@ -823,3 +824,179 @@ def test_must_not_only_bool_bodies(fuzz_index):
     t0 = set(si.analyze_query(vocab[0]))
     want_n = {d for d in raw if not (t0 & dt[d])}
     assert got_n == want_n
+
+
+# ---------------------------------------------------------------------------
+# function_score / boosting bodies: one executor, two regimes
+# ---------------------------------------------------------------------------
+
+N_FSCORE = 16
+_SCORE_MODES = ("multiply", "sum", "max", "min", "first", "avg")
+
+
+def _gen_fvf(rng: random.Random) -> dict:
+    return {"field": "content_len",
+            "factor": rng.choice([0.001, 0.004, 0.02]),
+            "modifier": rng.choice(["none", "log1p", "sqrt"])}
+
+
+def _gen_function(rng: random.Random, vocab: list[str],
+                  len_cuts: list[int]) -> dict:
+    fn = {}
+    r = rng.random()
+    if r < 0.4:
+        fn["filter"] = {"match": {"text": rng.choice(vocab)}}
+    elif r < 0.7:
+        fn["filter"] = {"range": {"content_len": {
+            "gte": rng.choice(len_cuts)}}}
+    if rng.random() < 0.5:
+        fn["field_value_factor"] = _gen_fvf(rng)
+    if "field_value_factor" not in fn or rng.random() < 0.5:
+        fn["weight"] = rng.choice([0.5, 1.0, 1.5, 2.5])
+    return fn
+
+
+def _gen_fscore(rng: random.Random, vocab: list[str],
+                len_cuts: list[int]) -> dict:
+    """One random boosting or function_score query: functions lists mix
+    filtered and unfiltered weight / field_value_factor functions under
+    every score_mode and both boost_modes, max_boost on and off, plus the
+    body-level field_value_factor shape; boosting draws negative_boost
+    on both sides of 1."""
+    query = {"match": {"text": _gen_text(rng, vocab)}}
+    r = rng.random()
+    if r < 0.3:
+        return {"boosting": {
+            "positive": query,
+            "negative": {"match": {"text": _gen_text(rng, vocab)}},
+            "negative_boost": rng.choice([0.0, 0.3, 0.7, 1.0, 1.5, 3.0])}}
+    spec = {"query": query, "boost_mode": rng.choice(["multiply", "sum"])}
+    if r < 0.45:
+        spec["field_value_factor"] = _gen_fvf(rng)
+    else:
+        spec["functions"] = [_gen_function(rng, vocab, len_cuts)
+                             for _ in range(rng.randint(1, 3))]
+        spec["score_mode"] = rng.choice(_SCORE_MODES)
+    if rng.random() < 0.5:
+        spec["max_boost"] = rng.choice([0.8, 1.5, 4.0])
+    return {"function_score": spec}
+
+
+def _len_cuts(raw: dict) -> list[int]:
+    """content_len quartiles: range filters that split the corpus."""
+    lens = sorted(len(t) for t in raw.values())
+    return [lens[len(lens) * q // 4] for q in (1, 2, 3)]
+
+
+def _fscore_oracle(query: dict, oidx, dt: dict, raw: dict,
+                   analyzer) -> dict:
+    """{doc_id: final score} over every matching doc, re-derived from the
+    raw body: BM25 from OracleIndex, filter membership and content_len
+    from the raw texts, and the ES combine rule of each score_mode (a
+    doc no function fires on keeps its query score; a null factor — log1p
+    of a value <= -1 — counts as 0)."""
+    def toks(q):
+        return set(pure.analyze(q["match"]["text"], analyzer))
+
+    kind, spec = next(iter(query.items()))
+    if kind == "boosting":
+        qt, neg = toks(spec["positive"]), toks(spec["negative"])
+        return {d: oidx.score(sorted(qt), d)
+                * (spec["negative_boost"] if neg & dt[d] else 1.0)
+                for d in raw if qt & dt[d]}
+    qt = toks(spec["query"])
+    fns = spec.get("functions") or [
+        {"field_value_factor": spec["field_value_factor"]}]
+    mode = spec.get("score_mode", "multiply")
+    out = {}
+    for d in raw:
+        if not qt & dt[d]:
+            continue
+        s = oidx.score(sorted(qt), d)
+        firing = []  # (weight, value) of each function firing on d
+        for fn in fns:
+            f = fn.get("filter")
+            if f and "match" in f:
+                ft = toks(f)
+                if ft and not ft & dt[d]:
+                    continue
+            elif f and len(raw[d]) < f["range"]["content_len"]["gte"]:
+                continue
+            u = 1.0
+            if "field_value_factor" in fn:
+                v = fn["field_value_factor"]
+                u = v["factor"] * len(raw[d])
+                if v["modifier"] == "sqrt":
+                    u = math.sqrt(u)
+                elif v["modifier"] == "log1p":
+                    u = math.log1p(u) if u > -1.0 else 0.0
+            firing.append((fn.get("weight", 1.0), u))
+        if firing:
+            ss = [w * u for w, u in firing]
+            if mode == "multiply":
+                comb = math.prod(ss)
+            elif mode == "sum":
+                comb = sum(ss)
+            elif mode == "max":
+                comb = max(ss)
+            elif mode == "min":
+                comb = min(ss)
+            elif mode == "first":
+                comb = ss[0]
+            else:  # avg: ES's weighted mean
+                comb = sum(ss) / sum(w for w, _ in firing)
+            if "max_boost" in spec:
+                comb = min(comb, spec["max_boost"])
+            s = s * comb if spec["boost_mode"] == "multiply" else s + comb
+        out[d] = s
+    return out
+
+
+def _fscore_mismatch(si, oidx, dt: dict, raw: dict, query: dict,
+                     size: int) -> str | None:
+    """Run one body at default caps and at BOOL_DRIVER_CAP = -1 (the
+    complete-relation regime); None when both return the same rows and
+    they equal the python oracle's (score desc, doc_id asc) top-`size`,
+    else a description of the first difference."""
+    from newssearchengine_spark.plans import search as search_mod
+
+    body = {"query": query}
+    got = [tuple(r) for r in es_search(si, body, size=size).collect()]
+    cap = search_mod.BOOL_DRIVER_CAP
+    search_mod.BOOL_DRIVER_CAP = -1
+    try:
+        dist = [tuple(r) for r in es_search(si, body, size=size).collect()]
+    finally:
+        search_mod.BOOL_DRIVER_CAP = cap
+    if got != dist:
+        return f"regimes differ: {got} vs {dist}"
+    want = sorted(_fscore_oracle(query, oidx, dt, raw, si.analyzer).items(),
+                  key=lambda t: (-round(t[1], 6), t[0]))[:size]
+    if [r[1] for r in got] != [d for d, _ in want]:
+        return f"ids differ: {got} vs {want}"
+    for r, (_, s) in zip(got, want):
+        if abs(r[2] - s) > 2e-6:
+            return f"score differs at doc {r[1]}: {r[2]} vs {s}"
+    return None
+
+
+def test_random_function_score_bodies_match_python_oracle(fuzz_index):
+    """Random boosting / function_score bodies through the one executor:
+    the default-cap run (WAND-probed where a bound exists) and the forced
+    complete-relation run return identical rows, equal to the
+    pure-python oracle's top-k."""
+    si, oidx, dt, raw, _repo = fuzz_index
+    vocab = _vocab(si, oidx)
+    cuts = _len_cuts(raw)
+    rng = random.Random(SEED + 8)
+    n_nonempty = 0
+    for i in range(N_FSCORE):
+        query = _gen_fscore(rng, vocab, cuts)
+        size = rng.choice([3, 10])
+        err = _fscore_mismatch(si, oidx, dt, raw, query, size)
+        assert err is None, (
+            f"function_score body #{i} (seed {SEED + 8:#x}): {query}: "
+            f"{err}")
+        n_nonempty += bool(_fscore_oracle(query, oidx, dt, raw,
+                                          si.analyzer))
+    assert n_nonempty >= N_FSCORE // 2

@@ -254,7 +254,7 @@ def test_function_score_fns_distributed_plan(spark, tmp_path, monkeypatch):
                 resume=False)
     si = SegmentIndex(spark, d, cache=False)
     monkeypatch.setattr(search_mod, "BOOL_DRIVER_CAP", -1)
-    out = si.search_function_score_fns(
+    out = si.search_function_score(
         "node cursor",
         [{"filter": {"range": {"content_len": {"gte": 150}}},
           "weight": 1.5},

@@ -6,6 +6,7 @@ verify determinism; this tool hunts beyond them).
     python tools/fuzz_sweep.py qs    [--seeds 3000:3020] [--per 6]
     python tools/fuzz_sweep.py slop  [--seeds 5000:5006] [--per 10]
     python tools/fuzz_sweep.py exp   [--seeds 11000:11001] [--per 120]
+    python tools/fuzz_sweep.py fscore [--seeds 13000:13010] [--per 6]
 
 Prints one line per mismatch and a final `SWEEP DONE fails=N`.
 The round-5 closing sweep of these three (plus an msearch variant)
@@ -274,14 +275,35 @@ def sweep_exp(seeds, per) -> int:
     return fails
 
 
+def sweep_fscore(seeds, per) -> int:
+    """Random boosting / function_score bodies (test_es_fuzz's generator
+    and oracle): both regimes row-identical and equal to the oracle."""
+    spark = _spark()
+    T, si, raw, oidx, dt = _fuzz_fixture(spark)
+    vocab = T._vocab(si, oidx)
+    cuts = T._len_cuts(raw)
+    fails = 0
+    for seed in seeds:
+        rng = random.Random(seed)
+        for i in range(per):
+            query = T._gen_fscore(rng, vocab, cuts)
+            size = rng.choice([3, 10])
+            err = T._fscore_mismatch(si, oidx, dt, raw, query, size)
+            if err is not None:
+                fails += 1
+                print(f"FSCORE seed={seed}#{i} size={size}: {query}: {err}")
+    return fails
+
+
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("what", choices=["bool", "qs", "slop", "exp"])
+    ap.add_argument("what", choices=["bool", "qs", "slop", "exp", "fscore"])
     ap.add_argument("--seeds", default="")
     ap.add_argument("--per", type=int, default=0)
     args = ap.parse_args()
     defaults = {"bool": ("1000:1012", 8), "qs": ("3000:3020", 6),
-                "slop": ("5000:5006", 10), "exp": ("11000:11001", 120)}
+                "slop": ("5000:5006", 10), "exp": ("11000:11001", 120),
+                "fscore": ("13000:13010", 6)}
     srange, per = defaults[args.what]
     if args.seeds:
         srange = args.seeds
@@ -289,7 +311,8 @@ def main():
         per = args.per
     lo, hi = (int(x) for x in srange.split(":"))
     fails = {"bool": sweep_bool, "qs": sweep_qs, "slop": sweep_slop,
-             "exp": sweep_exp}[args.what](range(lo, hi), per)
+             "exp": sweep_exp, "fscore": sweep_fscore}[args.what](
+        range(lo, hi), per)
     print(f"SWEEP DONE fails={fails}")
     sys.exit(1 if fails else 0)
 
